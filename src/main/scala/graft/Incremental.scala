@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.canon.ConnectedComponents
-import graft.extract.{ExtractMetrics, Lit, PatternAutomaton, PatternRule, TripleExtractor}
+import graft.extract.{ExtractSetup, Lit, PatternAutomaton, PatternRule}
 import graft.model.{GraphEdge, Ids, Page, Schema}
 import graft.store.TableIO
 
@@ -454,15 +454,12 @@ object Incremental {
       newPages.toDF().withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn").as[Page]
     }
-    val gaz = spark.sparkContext.broadcast(Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(PatternAutomaton.compile(rules))
-    val metrics = new ExtractMetrics(spark)
-    val flatB = TripleExtractor
-      .extractFlat(dedupPages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ex = new ExtractSetup(spark, nPersons, rules)
+    val flatBEnc = ex.cached(dedupPages.filter($"lang" === targetLang))
+    val flatB = ex.decode(flatBEnc)
     val batchCounters = Pipeline.flatCounters(flatB)
     val nBatch = batchCounters("pagesIn")
-    if (nBatch == 0L) { flatB.unpersist(false); return AppendStats(0, 0, 0, 0, 0, Nil) }
+    if (nBatch == 0L) { flatBEnc.unpersist(false); return AppendStats(0, 0, 0, 0, 0, Nil) }
 
     val pageIds = flatB.filter($"rowKind" === "p")
       .select($"pageId".as("id")).localCheckpoint(true)
@@ -692,7 +689,7 @@ object Incremental {
       if (edgesApplied) Some("edges") else None,
       if (nodesApplied) Some("nodes") else None,
       if (evApplied) Some("sameas_evidence") else None).flatten
-    flatB.unpersist(false)
+    flatBEnc.unpersist(false)
     oldComponents.unpersist(false)
     if (havePairs) components2.unpersist(false)
     AppendStats(nBatch, newMappingRows, remapN,
@@ -783,28 +780,26 @@ object Incremental {
     def keepOrder(df: DataFrame, like: Seq[String]): DataFrame =
       df.select(like.map(col): _*)
 
-    val gaz = spark.sparkContext.broadcast(Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(PatternAutomaton.compile(rules))
-    val metrics = new ExtractMetrics(spark)
-    val flatR0 = TripleExtractor
-      .extractFlat(removedPages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val ex = new ExtractSetup(spark, nPersons, rules)
+    val flatR0Enc = ex.cached(removedPages.filter($"lang" === targetLang))
 
     // presence anchor: restrict to pages actually IN the build
     val nodesDir = s"$outDir/nodes"
-    val batchPageIds = flatR0.filter($"rowKind" === "p").select($"pageId".as("id"))
+    val batchPageIds = ex.decode(flatR0Enc).filter($"rowKind" === "p")
+      .select($"pageId".as("id"))
     val presentPages = TableIO.read(spark, nodesDir, Some(bucketsOf(batchPageIds, "id")))
       .filter(col("kind") === Schema.NodeKinds.Page)
       .join(batchPageIds, Seq("id"), "left_semi")
       .select(col("id").as("presentPid")).localCheckpoint(true)
     val nPresent = presentPages.count()
     if (nPresent == 0L) {
-      flatR0.unpersist(false); presentPages.unpersist(false)
+      flatR0Enc.unpersist(false); presentPages.unpersist(false)
       return RemoveStats(0, 0, 0, 0, 0, 0, 0, 0, 0, 0)
     }
-    val flatR = flatR0.toDF()
-      .join(presentPages, flatR0("pageId") === col("presentPid"), "left_semi")
-      .as[graft.extract.FlatRow].persist(StorageLevel.MEMORY_AND_DISK)
+    val flatREnc = flatR0Enc
+      .join(presentPages, flatR0Enc("pageId") === col("presentPid"), "left_semi")
+      .as[graft.extract.FlatRowEnc].persist(StorageLevel.MEMORY_AND_DISK)
+    val flatR = ex.decode(flatREnc)
     val negCounters = Pipeline.flatCounters(flatR).map { case (k, v) => k -> -v }
 
     // refcount deltas FIRST (exactly-once via the batch marker): dimension
@@ -893,7 +888,7 @@ object Incremental {
         if (nAff == 0) (Set.empty[Int], 0L)
         else {
           val affPages = remaining.join(affectedUrls, Seq("url"), "left_semi").as[Page]
-          val flatA = TripleExtractor.extractFlat(affPages, gaz, auto, metrics)
+          val flatA = ex.decode(ex.encode(affPages))
           val regenerated = Pipeline.canonicalizeTriples(flatA, newC, canonBroadcastCutover)
           val affBuckets = bucketsOf(affectedUrls, "url")
           val cur = TableIO.read(spark, triplesDir, Some(affBuckets))
@@ -1009,7 +1004,7 @@ object Incremental {
       keepOrder(curN.join(delNodeIds, Seq("id"), "left_anti"), curN.columns),
       nodesDir, col("id"), nodeBuckets, negCounters, numBuckets)
 
-    flatR0.unpersist(false); flatR.unpersist(false); oldC.unpersist(false)
+    flatR0Enc.unpersist(false); flatREnc.unpersist(false); oldC.unpersist(false)
     presentPages.unpersist(false); delNodeIds.unpersist(false)
     if (newC != null) newC.unpersist(false)
     RemoveStats(nPresent, deadPairsN, remappedN, nDeadHosts, nDeadDoms, nDeadEnts,

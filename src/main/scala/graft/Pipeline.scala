@@ -64,11 +64,7 @@ object Pipeline {
           precomputedComponents: Option[DataFrame] = None): Tables = {
     import spark.implicits._
 
-    val g = defaultGazetteer(nPersons)
-    val a = PatternAutomaton.compile(rules)
-    val gaz = spark.sparkContext.broadcast(g)
-    val auto = spark.sparkContext.broadcast(a)
-    val metrics = new ExtractMetrics(spark)
+    val ex = new ExtractSetup(spark, nPersons, rules)
 
     // 1-2: language predicate BEFORE the expensive mapPartitions (the
     // necessary-condition prefilter shape, joern `queryTemplate.groovy:36-50`).
@@ -77,34 +73,17 @@ object Pipeline {
     // downstream stage and the 2→8 probes pinned its plateau on DRAM
     // bandwidth); `flat` is a decode VIEW restoring the exact historical
     // schema, so all consumers are unchanged and decode cost is CPU at the
-    // consuming projection, not resident bytes.
-    // KIND-SORTED cache batches: a page emits its p/m/e/t rows interleaved,
-    // so every 10k-row cached batch would hold every rowKind and no
-    // kind-restricted consumer could skip anything. Locally sorting on
-    // (rowKind, pred) before the persist makes batches kind-homogeneous
-    // (and clusters same_as inside the "t" run), so the columnar cache's
-    // per-batch min/max stats let InMemoryTableScanExec drop foreign-kind
-    // batches wholesale — the decode-view filters are folded back onto the
-    // int codes by DictDecodeFilterRewrite, which is what makes them
-    // stat-prunable in the first place. One local sort per partition at
-    // build, zero shuffle.
-    val flatEnc = TripleExtractor
-      .extractFlatEnc(pages.filter($"lang" === targetLang), gaz, auto, metrics)
-      .sortWithinPartitions($"rowKind", $"pred")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val predDict = spark.sparkContext.broadcast(a.preds)
-    val aliasDict = spark.sparkContext.broadcast(g.aliasArr)
-    val kindDict = spark.sparkContext.broadcast(FlatDict.RowKinds)
-    val labelDict = spark.sparkContext.broadcast(FlatDict.Labels)
-    val flat = TripleExtractor.decodeFlat(flatEnc, predDict, aliasDict,
-      kindDict, labelDict)
+    // consuming projection, not resident bytes. The cache is kind-sorted
+    // (ExtractSetup.cached) so kind-restricted scans skip foreign batches.
+    val flatEnc = ex.cached(pages.filter($"lang" === targetLang))
+    val flat = ex.decode(flatEnc)
 
     // 3: same-as edges (entity-id pairs) — the canonicalization input.
     // distinct() first: shrinks the edge multiset to the entity-pair set
     // distributed-side (partial-agg), so the adaptive-CC probe collects
     // thousands of pairs, not millions of occurrences. Filters run on the
     // CODES (byte/int compares against the encoded cache, no decode).
-    val sameAsCode = a.predIdx.getOrElse("same_as", -1)
+    val sameAsCode = ex.automaton.predIdx.getOrElse("same_as", -1)
     // idB/idC carry subj/obj on "t" rows (FlatRowEnc overlay)
     val sameAs = flatEnc
       .filter($"rowKind" === FlatDict.KindT && $"pred" === sameAsCode && $"idC" >= 0)
@@ -131,7 +110,7 @@ object Pipeline {
     // the flat cache (≙ nodes.csv / edges.csv emission)
     val (nodes, edges) = graphTables(spark, flat, components)
 
-    Tables(flat, flatEnc.toDF(), components, triples, nodes, edges, metrics)
+    Tables(flat, flatEnc.toDF(), components, triples, nodes, edges, ex.metrics)
   }
 
   /** Canonicalize the extracted triples with a (id, component) mapping —

@@ -2,6 +2,7 @@ package graft.extract
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.storage.StorageLevel
 import org.apache.spark.util.LongAccumulator
 
 import graft.model._
@@ -15,6 +16,7 @@ case class PageExtract(
     url: String,
     host: String,
     nSentences: Int,
+    sentencesDropped: Int, // past MaxSentencesPerPage, never extracted
     mentions: Seq[LinkedMention],
     triples: Seq[PageTriple],
     error: String) // null when clean; a bad page never kills the job
@@ -190,6 +192,52 @@ final class ExtractMetrics(spark: SparkSession) extends Serializable {
     * lossy for this input and the overlay must grow a column back). */
   val overlayLost: LongAccumulator =
     spark.sparkContext.longAccumulator("overlayLost")
+  /** Sentences dropped by the per-page sentence cap
+    * ([[TripleExtractor.MaxSentencesPerPage]]) — a semantic bound like the
+    * SAME_SENTENCE cap, counted so truncation shows when it fires. */
+  val sentencesDropped: LongAccumulator =
+    spark.sparkContext.longAccumulator("sentencesDropped")
+}
+
+/** The one extraction setup, keyed by `nPersons` and `rules`: the gazetteer
+  * and automaton broadcasts the operator reads, the four dictionaries the
+  * decode view reads, and the counters the operator bumps. Every page→rows
+  * caller builds one of these and runs [[encode]] / [[decode]] — the build,
+  * the increments, streaming and the CLI share one code path. */
+final class ExtractSetup(spark: SparkSession, nPersons: Int = 500,
+                         rules: Seq[PatternRule] = PatternAutomaton.DefaultRules) {
+  val automaton: PatternAutomaton = PatternAutomaton.compile(rules)
+  private val gazetteer = graft.Pipeline.defaultGazetteer(nPersons)
+  private val sc = spark.sparkContext
+  private[extract] val gaz: Broadcast[Gazetteer] = sc.broadcast(gazetteer)
+  private[extract] val auto: Broadcast[PatternAutomaton] = sc.broadcast(automaton)
+  private val preds = sc.broadcast(automaton.preds)
+  private val aliases = sc.broadcast(gazetteer.aliasArr)
+  private val kinds = sc.broadcast(FlatDict.RowKinds)
+  private val labels = sc.broadcast(FlatDict.Labels)
+  val metrics: ExtractMetrics = new ExtractMetrics(spark)
+
+  /** Pages → encoded rows ([[TripleExtractor.extractFlatEnc]]). */
+  def encode(pages: Dataset[Page]): Dataset[FlatRowEnc] =
+    TripleExtractor.extractFlatEnc(pages, this)
+
+  /** [[encode]], KIND-SORTED and persisted — the cache the build and the
+    * increments read through [[decode]]. A page emits its p/m/e/t rows
+    * interleaved, so every 10k-row cached batch would hold every rowKind
+    * and no kind-restricted consumer could skip anything. Locally sorting
+    * on (rowKind, pred) makes batches kind-homogeneous (and clusters
+    * same_as inside the "t" run), so the columnar cache's per-batch min/max
+    * stats let InMemoryTableScanExec drop foreign-kind batches wholesale —
+    * the decode-view filters are folded back onto the int codes by
+    * DictDecodeFilterRewrite. One local sort per partition, zero shuffle.
+    * Streams cannot sort, so streaming callers use [[encode]] directly. */
+  def cached(pages: Dataset[Page]): Dataset[FlatRowEnc] =
+    encode(pages).sortWithinPartitions("rowKind", "pred")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** The [[FlatRow]] view over an encoded frame ([[TripleExtractor.decodeFlat]]). */
+  def decode(enc: Dataset[FlatRowEnc]): Dataset[FlatRow] =
+    TripleExtractor.decodeFlat(enc, preds, aliases, kinds, labels)
 }
 
 /** The local half of the pipeline: HTML→text → sentences → mentions →
@@ -212,66 +260,18 @@ object TripleExtractor {
     * depth 5 / path cap 30 (`slice.groovy:2-3`, `dataflow.groovy:157-158`). */
   val MaxSentencesPerPage = 1000
 
-  def extract(
-      pages: Dataset[Page],
-      gaz: Broadcast[Gazetteer],
-      rules: Broadcast[PatternAutomaton],
-      metrics: ExtractMetrics): Dataset[PageExtract] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions { it =>
-      val g = gaz.value
-      val auto = rules.value
-      it.map { p =>
-        metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto) // total: errors come back in `error`
-        if (ex.error != null) metrics.pagesErrored.add(1)
-        else {
-          metrics.sentences.add(ex.nSentences)
-          metrics.mentions.add(ex.mentions.size)
-          metrics.triples.add(ex.triples.size)
-        }
-        ex
-      }
-    }
-  }
-
-  /** Flat-row extraction: same per-page pure function, rows out immediately. */
-  def extractFlat(
-      pages: Dataset[Page],
-      gaz: Broadcast[Gazetteer],
-      rules: Broadcast[PatternAutomaton],
-      metrics: ExtractMetrics): Dataset[FlatRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions { it =>
-      val g = gaz.value
-      val auto = rules.value
-      it.flatMap { p =>
-        metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto) // total: errors come back as rows
-        if (ex.error != null) metrics.pagesErrored.add(1)
-        else {
-          metrics.sentences.add(ex.nSentences)
-          metrics.mentions.add(ex.mentions.size)
-          metrics.triples.add(ex.triples.size)
-        }
-        toFlatRows(ex, metrics)
-      }
-    }
-  }
-
-  /** Dictionary-encoded flat extraction — the variant the PIPELINE caches
-    * ([[FlatRowEnc]] motivation). Same per-page pure function, then a total
+  /** THE page→rows operator: the per-page pure function, then a total
     * per-row encode against the broadcast vocabularies (two hash lookups on
-    * mention/triple rows — noise next to extraction itself). */
-  def extractFlatEnc(
-      pages: Dataset[Page],
-      gaz: Broadcast[Gazetteer],
-      rules: Broadcast[PatternAutomaton],
-      metrics: ExtractMetrics): Dataset[FlatRowEnc] = {
+    * mention/triple rows — noise next to extraction itself). Every caller —
+    * the build, the increments, streaming, the CLI — runs this and reads it
+    * through [[decodeFlat]] ([[FlatRowEnc]] motivation). */
+  def extractFlatEnc(pages: Dataset[Page], setup: ExtractSetup): Dataset[FlatRowEnc] = {
     val spark = pages.sparkSession
     import spark.implicits._
+    // the closure captures the broadcasts and counters, never the setup
+    val gaz = setup.gaz
+    val rules = setup.auto
+    val metrics = setup.metrics
     pages.mapPartitions { it =>
       val g = gaz.value
       val auto = rules.value
@@ -279,10 +279,11 @@ object TripleExtractor {
       val predIdx = auto.predIdx
       it.flatMap { p =>
         metrics.pagesIn.add(1)
-        val ex = extractPage(p, g, auto)
+        val ex = extractPage(p, g, auto) // total: errors come back as rows
         if (ex.error != null) metrics.pagesErrored.add(1)
         else {
           metrics.sentences.add(ex.nSentences)
+          metrics.sentencesDropped.add(ex.sentencesDropped)
           metrics.mentions.add(ex.mentions.size)
           metrics.triples.add(ex.triples.size)
         }
@@ -489,14 +490,15 @@ object TripleExtractor {
                _: ArrayStoreException => ""
           case _ => s": ${String.valueOf(e.getMessage).take(200)}"
         }
-        PageExtract(Ids.pageId(safeUrl), safeUrl, hostOf(safeUrl), 0, Nil, Nil,
+        PageExtract(Ids.pageId(safeUrl), safeUrl, hostOf(safeUrl), 0, 0, Nil, Nil,
           s"${e.getClass.getSimpleName}$msg")
     }
 
   private def extractPageUnsafe(p: Page, gaz: Gazetteer, auto: PatternAutomaton): PageExtract = {
     val pageId = Ids.pageId(p.url)
     val text = TextExtractor.pageText(p.html, p.text)
-    val sents = Tokenizer.sentences(text).take(MaxSentencesPerPage)
+    val allSents = Tokenizer.sentences(text)
+    val sents = allSents.take(MaxSentencesPerPage)
 
     // pass 0: tokenize + normalize ONCE + find mentions per sentence
     val sentToks = sents.map(Tokenizer.tokens)
@@ -569,6 +571,6 @@ object TripleExtractor {
       si += 1
     }
     PageExtract(pageId, p.url, hostOf(p.url), sents.length,
-      mentions.result(), triples.result(), null)
+      allSents.length - sents.length, mentions.result(), triples.result(), null)
   }
 }

@@ -284,9 +284,8 @@ object TableIO {
     // (the history union keeps retained-but-replaced files time-travelable)
     val claimed = claimedFiles(dir, prior)
     (0 until numBuckets).foreach { b =>
-      bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty)).foreach { f =>
-        Files.deleteIfExists(bucketFilePath(dir, b, f))
-      }
+      bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty))
+        .foreach(deleteDataFile(dir, b, _))
     }
     val withBucket = df.withColumn("bucket",
       pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
@@ -349,9 +348,8 @@ object TableIO {
     // snapshot — current or retained history)
     val claimed = claimedFiles(dir, prior)
     (0 until numBuckets).foreach { b =>
-      bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty)).foreach { f =>
-        Files.deleteIfExists(bucketFilePath(dir, b, f))
-      }
+      bucketFiles(dir, b).filterNot(claimed.getOrElse(b, Set.empty))
+        .foreach(deleteDataFile(dir, b, _))
     }
     val withBucket = df.withColumn("bucket",
       pmod(xxhash64(bucketKey), lit(numBuckets)).cast("int"))
@@ -383,9 +381,7 @@ object TableIO {
       // of such a snapshot fails loudly on the missing file; keep
       // vacuum=false + expireSnapshots for a time-travelable rewrite chain)
       buckets.foreach { b =>
-        prior.files.getOrElse(b, Seq.empty).foreach { f =>
-          Files.deleteIfExists(bucketFilePath(dir, b, f))
-        }
+        prior.files.getOrElse(b, Seq.empty).foreach(deleteDataFile(dir, b, _))
       }
       pruneHistoryExcept(dir, m.snapshotId)
     }
@@ -430,9 +426,8 @@ object TableIO {
     drop.foreach(sid => Files.deleteIfExists(Paths.get(dir, "_snapshots", s"$sid.json")))
     val keep = claimedFiles(dir, head)
     (0 until head.numBuckets).foreach { b =>
-      bucketFiles(dir, b).filterNot(keep.getOrElse(b, Set.empty)).foreach { f =>
-        Files.deleteIfExists(bucketFilePath(dir, b, f))
-      }
+      bucketFiles(dir, b).filterNot(keep.getOrElse(b, Set.empty))
+        .foreach(deleteDataFile(dir, b, _))
     }
   }
 
@@ -461,6 +456,13 @@ object TableIO {
 
   private def bucketFilePath(dir: String, b: Int, name: String): Path =
     Paths.get(dir, "data", s"bucket=$b", name)
+
+  /** Delete one data file and its checksum sidecar (`.<name>.crc`, which
+    * the local Hadoop filesystem writes next to every part file). */
+  private def deleteDataFile(dir: String, b: Int, name: String): Unit = {
+    Files.deleteIfExists(bucketFilePath(dir, b, name))
+    Files.deleteIfExists(bucketFilePath(dir, b, s".$name.crc"))
+  }
 
   private def bucketFiles(dir: String, b: Int): Seq[String] = {
     val bd = Paths.get(dir, "data", s"bucket=$b")

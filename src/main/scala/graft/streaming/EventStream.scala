@@ -142,22 +142,19 @@ object EventStream {
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
-  /** Streaming triple extraction: the SAME `extractFlat` operator the batch
-    * pipeline uses, applied to a stream of pages — it is a stateless
-    * mapPartitions, so it lifts to streaming unchanged (append mode, no
-    * state). NOTE this view selects the TRIPLE rows only: failed pages are
-    * visible in the metrics accumulators, and a consumer that needs the
-    * per-page error rows should run `extractFlat` itself and keep the
-    * rowKind = "p" rows alongside. */
+  /** Streaming triple extraction: the same encoded operator and decode
+    * view the batch pipeline runs (`ExtractSetup.encode` / `decode`),
+    * applied to a stream of pages — it is a stateless mapPartitions, so it
+    * lifts to streaming unchanged (append mode, no state; no kind-sort,
+    * which streams reject). NOTE this view selects the TRIPLE rows only:
+    * failed pages are visible in the metrics accumulators, and a consumer
+    * that needs the per-page error rows should decode the operator's output
+    * itself and keep the rowKind = "p" rows alongside. */
   def streamingTriples(spark: SparkSession, pages: DataFrame,
                        nPersons: Int = 500): DataFrame = {
     import spark.implicits._
-    val gaz = spark.sparkContext.broadcast(graft.Pipeline.defaultGazetteer(nPersons))
-    val auto = spark.sparkContext.broadcast(
-      graft.extract.PatternAutomaton.compile(graft.extract.PatternAutomaton.DefaultRules))
-    val metrics = new graft.extract.ExtractMetrics(spark)
-    graft.extract.TripleExtractor
-      .extractFlat(pages.as[graft.model.Page], gaz, auto, metrics)
+    val ex = new graft.extract.ExtractSetup(spark, nPersons)
+    ex.decode(ex.encode(pages.as[graft.model.Page]))
       .filter($"rowKind" === "t" && $"pred" =!= "same_as")
       .select($"subj", $"pred", $"obj", $"objValue", $"url", $"conf")
   }

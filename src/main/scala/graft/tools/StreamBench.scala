@@ -7,9 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.EventStream
 
-/** Streaming throughput probe (BASELINE.md evidence; the streaming analog of
-  * ExtractProbe's controlled repeats — run each measurement twice in one JVM
-  * and report the steady-state second rep).
+/** Streaming throughput probe (BASELINE.md evidence): run each measurement
+  * twice in one JVM and report the steady-state second rep.
   *
   *   runMain graft.tools.StreamBench [nEvents] [nPages] [cores]
   *
@@ -18,7 +17,7 @@ import graft.streaming.EventStream
   *    expected session count is exact) through flatMapGroupsWithState via
   *    MemoryStream in ~10 micro-batches. Reports events/sec and the session
   *    count (must equal nEvents/50 after the far-future flush sentinel).
-  * 2. Streaming extraction: the SAME extractFlat operator the batch pipeline
+  * 2. Streaming extraction: the same encoded operator the batch pipeline
   *    uses, over a FILE-SOURCE page stream (PageGen corpus parquet split
   *    into files, maxFilesPerTrigger=1 → real micro-batches), counted via
   *    foreachBatch (no driver materialization). Reports pages/sec and

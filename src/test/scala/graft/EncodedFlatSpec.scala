@@ -8,10 +8,12 @@ import org.apache.spark.sql.functions._
 import graft.extract._
 import graft.model._
 
-/** The dictionary-encoded flat cache (FlatRowEnc + decodeFlat) must be a
-  * BIT-EXACT round trip of the historical string frame: every downstream
-  * consumer — the driver's 99 oracled entries included — reads through the
-  * decode view, so any divergence here is a silent corpus-wide corruption. */
+/** The one extraction operator's output (FlatRowEnc) read through the
+  * decode view must be a BIT-EXACT round trip of the pure per-page rows
+  * (`toFlatRows(extractPage(p))`): every downstream consumer — the build,
+  * the increments, streaming, the CLI and every oracled query entry —
+  * reads through that view, so any divergence here is a silent corpus-wide
+  * corruption. */
 class EncodedFlatSpec extends AnyFunSuite with Matchers {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -21,31 +23,27 @@ class EncodedFlatSpec extends AnyFunSuite with Matchers {
     PageGen.pages(spark, cfg).filter($"lang" === "en")
   }
 
+  // "extractFlat" names the historical string frame: the pure per-page rows
+  // toFlatRows(extractPage(p)), the reference this round trip is held to
   test("decodeFlat(extractFlatEnc) == extractFlat, row for row, null for null") {
     val pages = corpus(400)
+    val ex = new ExtractSetup(spark, 500)
+    def sorted(rs: Array[FlatRow]) =
+      rs.sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
+
+    // the reference is the pure per-page function, run on the driver
     val g = Pipeline.defaultGazetteer(500)
     val a = PatternAutomaton.compile(PatternAutomaton.DefaultRules)
-    val gaz = spark.sparkContext.broadcast(g)
-    val auto = spark.sparkContext.broadcast(a)
-    val m1 = new ExtractMetrics(spark)
-    val m2 = new ExtractMetrics(spark)
-
-    val want = TripleExtractor.extractFlat(pages, gaz, auto, m1)
-      .collect().sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
-    val enc = TripleExtractor.extractFlatEnc(pages, gaz, auto, m2)
-    val got = TripleExtractor.decodeFlat(enc,
-        spark.sparkContext.broadcast(a.preds),
-        spark.sparkContext.broadcast(g.aliasArr),
-        spark.sparkContext.broadcast(FlatDict.RowKinds),
-        spark.sparkContext.broadcast(FlatDict.Labels))
-      .collect().sortBy(r => (r.pageId, r.rowKind, r.mentionId, r.subj, r.obj, String.valueOf(r.pred)))
+    val want = sorted(pages.collect()
+      .flatMap(p => TripleExtractor.toFlatRows(TripleExtractor.extractPage(p, g, a))))
+    val got = sorted(ex.decode(ex.encode(pages)).collect())
 
     got.length shouldBe want.length
     got.zip(want).foreach { case (g0, w0) => g0 shouldBe w0 }
-    m2.dictMisses.value shouldBe 0L
+    ex.metrics.dictMisses.value shouldBe 0L
     // the kind-determined overlay defaults (conf; p-dim fields on non-"p"
     // rows) never deviated — the encode was lossless for this corpus
-    m2.overlayLost.value shouldBe 0L
+    ex.metrics.overlayLost.value shouldBe 0L
   }
 
   test("the persisted pipeline cache is the ENCODED shape (ints, not strings)") {

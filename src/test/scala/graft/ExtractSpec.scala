@@ -158,6 +158,20 @@ class LinkingSpec extends AnyFunSuite with Matchers {
     withClue(s"first diffs: ${diffs.take(5).mkString(", ")}") { diffs shouldBe empty }
   }
 
+  test("the sentence cap counts what it drops: per page and in the operator's accumulator") {
+    val text = (1 to TripleExtractor.MaxSentencesPerPage + 3)
+      .map(i => s"Ada Lovelace is $i years old .").mkString("\n")
+    val ex = TripleExtractor.extractPage(page(text), gaz, auto)
+    ex.nSentences shouldBe TripleExtractor.MaxSentencesPerPage
+    ex.sentencesDropped shouldBe 3
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val setup = new ExtractSetup(spark, 100)
+    setup.encode(Seq(page(text)).toDS()).count()
+    setup.metrics.sentencesDropped.value shouldBe 3L
+    setup.metrics.sentences.value shouldBe TripleExtractor.MaxSentencesPerPage.toLong
+  }
+
   test("a bad page never kills the job: error isolated per row") {
     // malformed page (null everything) goes through pageText fallback
     val ex = TripleExtractor.extractPage(page(""), gaz, auto)

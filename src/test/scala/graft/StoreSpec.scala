@@ -203,6 +203,30 @@ class StoreSpec extends AnyFunSuite with Matchers {
     TableIO.compact(spark, dir, col("key"), numBuckets = 8) shouldBe empty
   }
 
+  test("deleted data files take their .crc sidecars along: buckets hold only claimed files") {
+    import spark.implicits._
+    val dir = freshDir()
+    TableIO.writeBucketed(sample(), dir, col("key"), numBuckets = 8)
+    Seq(1000 until 1200, 1200 until 1400).foreach { r =>
+      TableIO.appendBucketed(r.map(i => (s"k$i", i.toLong)).toDF("key", "value"),
+        dir, col("key"), numBuckets = 8)
+    }
+    TableIO.compact(spark, dir, col("key"), numBuckets = 8) should not be empty
+    TableIO.expireSnapshots(dir, keepLast = 0)
+    val m = TableIO.readManifest(dir).get
+    (0 until 8).foreach { b =>
+      val claimed = m.files.getOrElse(b, Nil).toSet
+      val ls = Files.list(java.nio.file.Paths.get(dir, "data", s"bucket=$b"))
+      val onDisk = try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
+      withClue(s"bucket $b: ") {
+        claimed.subsetOf(onDisk) shouldBe true
+        (onDisk -- claimed -- claimed.map(f => s".$f.crc")) shouldBe empty
+      }
+    }
+    TableIO.read(spark, dir).count() shouldBe 1400L
+    TableIO.deleteRecursively(dir)
+  }
+
   test("time travel: append chain keeps every snapshot readable; expire reclaims") {
     import spark.implicits._
     val dir = freshDir()
